@@ -280,13 +280,7 @@ object PageRank {
     val d = params.damping
     var iter = 0
     var delta = Double.MaxValue
-    // env-gated per-iteration instrumentation (round-13: the SCALING.md
-    // distributed-loop timing at sf10 — tools/PrDist sets it); zero cost
-    // when unset, and it adds no action: the timed reduce below is the
-    // loop's one action either way
-    val logIters = sys.env.contains("SPARK_GRAFT_PR_LOG")
     while (iter < params.maxIter && delta >= params.tol) {
-      val iterT0 = System.nanoTime()
       val sm = sinkMass
       val contribs = eBySrc.join(state, part)
         .flatMap { case (_, ((dsts, ws), (r, _, _))) =>
@@ -307,9 +301,6 @@ object PageRank {
       state.unpersist(blocking = false)
       state = stepped.mapValues { case (nr, p, s, _) => (nr, p, s) }
       iter += 1
-      if (logIters)
-        println(f"PRITER iter=$iter delta=$delta%.3e " +
-          f"sec=${(System.nanoTime() - iterT0) / 1e9}%.2f")
     }
     state.map { case (id, (r, _, _)) => (id, r) }.toDF("id", "rank")
   }

@@ -3,6 +3,8 @@ package graft.serve
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
+import scala.util.control.NonFatal
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -121,7 +123,7 @@ final class HttpApi(spark: SparkSession, dir: String, port: Int = 0,
       override def handle(ex: HttpExchange): Unit = {
         val (status, body) =
           try f(ex)
-          catch { case e: Throwable => (500, detail(e.getMessage)) }
+          catch { case NonFatal(e) => (500, detail(e.getMessage)) }
         send(ex, status, body)
       }
     }
@@ -204,15 +206,7 @@ object HttpMain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val port = if (args.length > 1) args(1).toInt else 8080
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create()
     val api = new HttpApi(spark, dir, port)
     println(s"graft http api listening on ${api.start()}")
     Thread.currentThread().join()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.model.Tables
@@ -11,8 +10,8 @@ import graft.model.Tables
   * row counts with full column sets, so every declared query — and the
   * DuckDB oracle selfcheck — runs against the generated dir. The
   * distributional shape follows the real generator (TESTDATA.md /
-  * FIXTURES.md): documents draw 10–100 tokens uniformly from the REAL
-  * sf0.1 token vocabulary (read at run time, not hardcoded), languages
+  * FIXTURES.md): documents draw 10–100 tokens (a Zipf law headed by the
+  * real sf0.1 vocabulary — see below), languages
   * and sources keep their cardinalities (5 / 20), orders and lineitem
   * keep the per-customer (10 orders) and per-order (4 items) densities,
   * embeddings keep dim 64 / 10 labels. region/nation are copied
@@ -31,15 +30,7 @@ object GenScale {
     val out = args.headOption.getOrElse("/tmp/graft-sf1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val src = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create()
     import spark.implicits._
 
     val nDocs = 5000L * factor
@@ -193,7 +184,7 @@ object GenScale {
     // int64 of NANOS — the same VALUES Tables.events reads from the
     // real table under nanosAsLong, but WITHOUT the TIMESTAMP(NANOS)
     // logical annotation Spark cannot write (so this dir feeds
-    // QProfile/Bench only; the DuckDB oracles CAST(ts AS TIMESTAMP)
+    // Profile/Bench only; the DuckDB oracles CAST(ts AS TIMESTAMP)
     // and would reject the bare BIGINT — oracle-gate at the real sf
     // dirs, bench here)
     val nEvents = 100000L * factor
